@@ -10,8 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from recommendation_system_big_data_spark.session import ensure_runtime_conf
+from recommendation_system_big_data_spark.session import ensure_runtime_conf, session_memo
 
 #: Every driver-provided table (TESTDATA.md / FIXTURES.md §B).
 TABLES = (
@@ -30,6 +31,18 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
+#: Session-scoped parquet schemas: (applicationId, path, fingerprint) →
+#: the StructType Spark inferred from the footer. Inference is a one-task
+#: Spark job on every `spark.read.parquet`; a read with `.schema(...)` runs
+#: none, so a session pays it once per table version, not once per query.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+#: Cap = the ten testdata tables × the three corpora a session realistically
+#: interleaves (the test suite alternates sf0.001/sf0.01, bench adds sf0.1),
+#: rounded up.
+_SCHEMAS_MAX = 32
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame.
 
@@ -41,9 +54,27 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (NTZ) type they arrive as; epoch math must go through `epoch_us`/
     `epoch_s` below, which are timezone-agnostic and accept both NTZ and
     instant inputs.
+
+    The inferred schema is memoised per table fingerprint (`_SCHEMAS`): a
+    rewritten file is re-inferred. Paths the local filesystem cannot stat
+    (remote stores, missing tables) are read uncached, so they fail or
+    succeed exactly as a plain `spark.read.parquet` does.
     """
     ensure_runtime_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        fingerprint = table_fingerprint(sf_dir, name)
+    except OSError:
+        df = spark.read.parquet(path)
+    else:
+        schema = session_memo(
+            _SCHEMAS,
+            spark,
+            (path, fingerprint),
+            lambda: spark.read.parquet(path).schema,
+            _SCHEMAS_MAX,
+        )
+        df = spark.read.schema(schema).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
@@ -93,18 +124,36 @@ PARQUET_BROADCAST_EXPANSION = 8
 BROADCAST_THRESHOLD_BYTES = (64 * 1024 * 1024) // PARQUET_BROADCAST_EXPANSION
 
 
-def table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a testdata table (single parquet file per table)."""
+def _table_files(sf_dir: str, name: str) -> list[str]:
+    """Every file of a testdata table (one parquet file, or a directory)."""
     import os
 
     path = f"{sf_dir}/{name}.parquet"
     if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
-        )
-    return os.path.getsize(path)
+        return [
+            os.path.join(root, f) for root, _, files in os.walk(path) for f in files
+        ]
+    return [path]
+
+
+def table_bytes(sf_dir: str, name: str) -> int:
+    """On-disk size of a testdata table."""
+    import os
+
+    return sum(os.path.getsize(f) for f in _table_files(sf_dir, name))
+
+
+def table_fingerprint(sf_dir: str, name: str) -> tuple[int, int]:
+    """(byte size, newest mtime_ns) of a table's files: the version key of
+    the session caches built from a table. Rewriting the table changes it,
+    so a cache keyed on it refits instead of serving a stale entry."""
+    import os
+
+    stats = [os.stat(f) for f in _table_files(sf_dir, name)]
+    return (
+        sum(st.st_size for st in stats),
+        max((st.st_mtime_ns for st in stats), default=0),
+    )
 
 
 def maybe_broadcast(df: DataFrame, sf_dir: str, name: str) -> DataFrame:

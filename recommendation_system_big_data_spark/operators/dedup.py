@@ -31,6 +31,7 @@ from recommendation_system_big_data_spark.functions.vectors import (
     norm,
 )
 from recommendation_system_big_data_spark.registry import register
+from recommendation_system_big_data_spark.session import session_memo
 
 #: MinHash configuration: 64 hashes in 16 bands of 4 rows → LSH s-curve
 #: threshold (1/16)^(1/4) ≈ 0.50, matching the declared Jaccard cutoff.
@@ -188,25 +189,17 @@ _HOT_SHINGLES: dict[tuple, DataFrame] = {}
 
 
 def _lru_cached_df(cache: dict, spark: SparkSession, key_tail: tuple, build, max_entries: int) -> DataFrame:
-    """Session-scoped LRU cache of persisted DataFrames. Eviction is
-    least-recently-USED (re-insert on hit — ADVICE r2: FIFO could evict the
-    hot entry while a colder, older one survives); entries from stopped
-    sessions are dropped without unpersist (their contexts are gone)."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id,) + key_tail
-    for k in [k for k in cache if k[0] != app_id]:
-        cache.pop(k)
-    df = cache.get(key)
-    if df is None:
-        while len(cache) >= max_entries:
-            # Non-blocking: lineage recomputes if a straggler still holds
-            # the old frame; blocks drain in the background.
-            cache.pop(next(iter(cache))).unpersist(blocking=False)
-        df = build().persist()
-    else:
-        cache.pop(key)
-    cache[key] = df
-    return df
+    """Session-scoped LRU cache of persisted DataFrames (session.session_memo).
+    Eviction unpersists non-blocking: lineage recomputes if a straggler
+    still holds the old frame; blocks drain in the background."""
+    return session_memo(
+        cache,
+        spark,
+        key_tail,
+        lambda: build().persist(),
+        max_entries,
+        on_evict=lambda df: df.unpersist(blocking=False),
+    )
 
 
 def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:

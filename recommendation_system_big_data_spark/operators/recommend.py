@@ -7,6 +7,16 @@ collect-loop unnest antipattern (model-als.py:134-139) replaced by a single
 `explode` plan (op #44) and the enrichment join expressed as in
 queries/flagship.py.
 
+Fit once, serve many (model-als.py:122-139 fits one model and serves
+every step from it): every job that fits with the reference
+hyperparameters takes its model from the session cache `fitted_als`, so a
+session fits at most two models per corpus — the 80/20 split
+(`als_predict`, `als_rmse`) and the full ratings (`als_recommend_topk`,
+`als_recommend_user_subset`, `als_enriched_recs`, `als_item_similarity`,
+`als_eval_coverage_novelty`). `als_param_grid` fits its own candidates.
+`train_als` stays the only function that fits; the cache calls it on a
+miss only.
+
 All ALS queries are ⊘ rows-only (SURVEY.md §5.2): factorization output is
 seed- and partitioning-sensitive, so the driver checks rows/schema and the
 pytest suite checks the RMSE tolerance gate mirroring model-als.py:127-129.
@@ -14,16 +24,21 @@ pytest suite checks the RMSE tolerance gate mirroring model-als.py:127-129.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from recommendation_system_big_data_spark.catalog import load
+from recommendation_system_big_data_spark.catalog import load, table_fingerprint
 from recommendation_system_big_data_spark.registry import register
+from recommendation_system_big_data_spark.session import session_memo
 
 #: Reference hyperparameters, model-als.py:111-120.
 ALS_PARAMS = dict(maxIter=10, regParam=0.1, rank=10, nonnegative=True)
 SEED = 42
 TOP_K = 10
+#: The reference's train/test weights (model-als.py:122).
+HOLDOUT_SPLIT = (0.8, 0.2)
 
 
 def ratings_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,14 +65,58 @@ def train_als(ratings: DataFrame):
     return als.fit(ratings)
 
 
+class FittedALS(NamedTuple):
+    model: object
+    #: The held-out frame of the same `randomSplit` call the model trained
+    #: on (None for a full-ratings fit): consumers score exactly the rows
+    #: the model never saw.
+    held_out: DataFrame | None
+
+
+#: Session-scoped fitted ALS models: (applicationId, sf_dir, events
+#: fingerprint, split) → FittedALS. The fingerprint (catalog.
+#: table_fingerprint) makes a rewritten events table refit instead of
+#: serving a stale model. Eviction drops the reference; Spark's
+#: ContextCleaner then frees the model's persisted factor RDDs.
+_FITTED_ALS: dict[tuple, FittedALS] = {}
+
+#: Cap = two fits (split, full) × the three corpora a session realistically
+#: interleaves (the test suite alternates sf0.001/sf0.01, bench adds sf0.1).
+_FITTED_ALS_MAX = 6
+
+
+def fitted_als(
+    spark: SparkSession, sf_dir: str, split: tuple[float, ...] | None = None
+) -> FittedALS:
+    """The corpus's ALS model with the reference hyperparameters, fitted once
+    per session and events-table version: on the first weight of a seeded
+    `randomSplit(split)` (keeping the held-out rest), or on the full
+    ratings when ``split`` is None."""
+
+    def fit() -> FittedALS:
+        ratings = ratings_from_events(spark, sf_dir)
+        if split is None:
+            return FittedALS(train_als(ratings), None)
+        train, held_out = ratings.randomSplit(list(split), seed=SEED)
+        return FittedALS(train_als(train), held_out)
+
+    return session_memo(
+        _FITTED_ALS,
+        spark,
+        (sf_dir, table_fingerprint(sf_dir, "events"), split),
+        fit,
+        _FITTED_ALS_MAX,
+    )
+
+
 @register("als_recommend_topk", oracle=None, tags=("ml",))
 def als_recommend_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train ALS on the full ratings table and emit per-user top-10 as FLAT
-    rows: recommendForAllUsers → explode(ARRAY<STRUCT>) (ops #40, #43, #44).
-    The reference did this flatten with a driver-side Python loop
-    (model-als.py:134-139); here it is one logical plan end-to-end."""
-    ratings = ratings_from_events(spark, sf_dir)
-    model = train_als(ratings)
+    """Per-user top-10 from the session's full-ratings ALS model
+    (`fitted_als`) as FLAT rows: recommendForAllUsers →
+    explode(ARRAY<STRUCT>) (ops #40, #43, #44). The reference did this
+    flatten with a driver-side Python loop (model-als.py:134-139); here it
+    is one logical plan end-to-end."""
+    model = fitted_als(spark, sf_dir).model
     recs = model.recommendForAllUsers(TOP_K)
     flat = recs.select(
         "user_id", F.posexplode("recommendations").alias("pos", "rec")
@@ -122,7 +181,7 @@ def als_recommend_user_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape gated in tests/test_recommend.py."""
     n_recs = 30
     ratings = ratings_from_events(spark, sf_dir)
-    model = train_als(ratings)
+    model = fitted_als(spark, sf_dir).model
     # Deterministic existing user: the smallest user_id in the ratings —
     # built as a 1-row DataFrame without a driver round-trip (the reference
     # collect()ed the scalar; recommendForUserSubset only needs a DataFrame
@@ -141,12 +200,10 @@ def als_recommend_user_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("als_predict", oracle=None, tags=("ml",))
 def als_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Score the held-out split with the trained model (op #41;
-    model-als.py:126 `model.transform(test)`). ⊘ rows-only — factor
-    matrices are seed/partitioning-sensitive."""
-    ratings = ratings_from_events(spark, sf_dir)
-    train, test = ratings.randomSplit([0.8, 0.2], seed=SEED)
-    model = train_als(train)
+    """Score the held-out split with the model trained on the rest of the
+    same split (op #41; model-als.py:126 `model.transform(test)`).
+    ⊘ rows-only — factor matrices are seed/partitioning-sensitive."""
+    model, test = fitted_als(spark, sf_dir, HOLDOUT_SPLIT)
     return model.transform(test).select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("item_id").cast("long").alias("item_id"),
@@ -165,17 +222,16 @@ RMSE_BAND = (0.0, 3.0)
 
 @register("als_rmse", oracle=None, tags=("ml",))
 def als_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded 80/20 split → fit train → score test → RMSE, exactly the
-    reference evaluation loop (model-als.py:122-129; ops #33, #41, #42).
+    """Seeded 80/20 split → fit train (once per session, `fitted_als`) →
+    score test → RMSE, exactly the reference evaluation loop
+    (model-als.py:122-129; ops #33, #41, #42).
     Returns a 1-row metric frame and FAILS LOUD if the RMSE leaves
     RMSE_BAND — the driver's ⊘ rows-only check can't see values, so an
     out-of-band factorization must surface as a query ERROR, not a
     quietly green 1-row result (VERDICT r11 #7)."""
     from pyspark.ml.evaluation import RegressionEvaluator
 
-    ratings = ratings_from_events(spark, sf_dir)
-    train, test = ratings.randomSplit([0.8, 0.2], seed=SEED)
-    model = train_als(train)
+    model, test = fitted_als(spark, sf_dir, HOLDOUT_SPLIT)
     predictions = model.transform(test).where(
         F.col("prediction").isNotNull() & ~F.isnan("prediction")
     )
@@ -185,7 +241,7 @@ def als_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # summarizer, and skip the band check — no evidence is not a broken
     # factorization. r13 tiny-fixture rows-only probe finding.
     if predictions.limit(1).count() == 0:
-        return load(spark, sf_dir, "events").sparkSession.createDataFrame(
+        return spark.createDataFrame(
             [("rmse", None)], "metric string, value double"
         )
     rmse = RegressionEvaluator(
@@ -197,9 +253,7 @@ def als_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"als_rmse out of band: rmse={rmse!r} not in ({lo}, {hi}) — "
             "the factorization is broken (see RMSE_BAND)"
         )
-    return load(spark, sf_dir, "events").sparkSession.createDataFrame(
-        [("rmse", float(rmse))], ["metric", "value"]
-    )
+    return spark.createDataFrame([("rmse", float(rmse))], ["metric", "value"])
 
 
 @register("als_enriched_recs", oracle=None, tags=("ml",))
@@ -210,7 +264,7 @@ def als_enriched_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     ratings = ratings_from_events(spark, sf_dir)
-    model = train_als(ratings)
+    model = fitted_als(spark, sf_dir).model
     flat = (
         model.recommendForAllUsers(TOP_K)
         .select("user_id", F.explode("recommendations").alias("rec"))
@@ -253,7 +307,7 @@ def als_param_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.recommendation import ALS
 
     ratings = ratings_from_events(spark, sf_dir)
-    train, val = ratings.randomSplit([0.8, 0.2], seed=SEED)
+    train, val = ratings.randomSplit(list(HOLDOUT_SPLIT), seed=SEED)
     train = train.cache()
     val = val.cache()
     evaluator = RegressionEvaluator(
@@ -324,8 +378,7 @@ def als_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the event volume."""
     from pyspark.sql.window import Window
 
-    ratings = ratings_from_events(spark, sf_dir)
-    model = train_als(ratings)
+    model = fitted_als(spark, sf_dir).model
     f = model.itemFactors.select(
         F.col("id").alias("item_id"), F.col("features").alias("v")
     )

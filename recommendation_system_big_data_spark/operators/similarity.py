@@ -28,6 +28,7 @@ from recommendation_system_big_data_spark.functions.vectors import (
     norm,
 )
 from recommendation_system_big_data_spark.registry import register
+from recommendation_system_big_data_spark.session import session_memo
 
 TOP_K = 10
 N_QUERIES = 20  # vec_id < 20 form the deterministic query set
@@ -216,20 +217,7 @@ _FITTED_MODELS_MAX = 12
 
 
 def _session_model(spark: SparkSession, key_tail: tuple, build):
-    app_id = spark.sparkContext.applicationId
-    key = (app_id,) + key_tail
-    for k in [k for k in _FITTED_MODELS if k[0] != app_id]:
-        _FITTED_MODELS.pop(k)
-    if key in _FITTED_MODELS:
-        # true LRU: a hit moves to the back so interleaved corpora don't
-        # evict each other's hot models
-        _FITTED_MODELS[key] = _FITTED_MODELS.pop(key)
-        return _FITTED_MODELS[key]
-    model = build()  # may recursively insert (hier IVF builds coarse first)
-    _FITTED_MODELS[key] = model
-    while len(_FITTED_MODELS) > _FITTED_MODELS_MAX:
-        _FITTED_MODELS.pop(next(iter(_FITTED_MODELS)))
-    return model
+    return session_memo(_FITTED_MODELS, spark, key_tail, build, _FITTED_MODELS_MAX)
 
 
 def corpus_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:

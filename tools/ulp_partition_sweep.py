@@ -83,6 +83,7 @@ def _clear_session_caches():
     overstated exactly this way)."""
     from recommendation_system_big_data_spark.operators import dedup as _dedup
     from recommendation_system_big_data_spark.operators import (
+        recommend as _recommend,
         similarity as _similarity,
     )
 
@@ -91,6 +92,7 @@ def _clear_session_caches():
             df.unpersist(blocking=False)
         cache.clear()
     _similarity._FITTED_MODELS.clear()
+    _recommend._FITTED_ALS.clear()
 
 
 def _norm_exact(v):
