@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from recommendation_system_big_data_spark.session import ensure_runtime_conf, session_memo
+from recommendation_system_big_data_spark.session import ensure_runtime_conf
 
 #: Every driver-provided table (TESTDATA.md / FIXTURES.md §B).
 TABLES = (
@@ -31,11 +31,92 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-#: Session-scoped parquet schemas: (applicationId, path, fingerprint) →
-#: the StructType Spark inferred from the footer. Inference is a one-task
-#: Spark job on every `spark.read.parquet`; a read with `.schema(...)` runs
-#: none, so a session pays it once per table version, not once per query.
-_SCHEMAS: dict[tuple, StructType] = {}
+#: Every store made by `session_store`, so `clear_session_caches` reaches
+#: the caches of every loaded module.
+_STORES: list[dict] = []
+
+
+def session_store() -> dict:
+    """A new, registered store for `session_cache`."""
+    store: dict = {}
+    _STORES.append(store)
+    return store
+
+
+def _evict(store: dict, key: tuple) -> None:
+    value = store.pop(key)
+    if isinstance(value, DataFrame):
+        # Non-blocking: the CacheManager entry goes at once, so no later
+        # plan over the same files is served these blocks; the blocks
+        # drain in the background.
+        value.unpersist(blocking=False)
+
+
+def session_cache(
+    store: dict,
+    spark: SparkSession,
+    sf_dir: str,
+    tables: tuple[str, ...],
+    params: tuple,
+    build,
+    max_entries: int,
+):
+    """Session-scoped LRU memo behind every fit-once cache of the engine
+    (parquet schemas, ALS models, the shingle index, ANN quantizers).
+
+    The key is ``(applicationId, sf_dir, fingerprints, *params)``, where
+    ``fingerprints`` holds `table_fingerprint` of each table in ``tables``
+    (``()`` for a cache that reads no table), so a hit is what a fresh
+    ``build()`` would return:
+    - a table the local filesystem cannot stat (remote store, missing
+      table) is built uncached, and fails or succeeds as ``build()`` does;
+    - a DataFrame value is persisted on build and unpersisted on eviction;
+    - a new table version first evicts the entries of the same
+      ``(applicationId, sf_dir, params)`` built from another one. Spark's
+      CacheManager serves a persisted frame to any plan of the same shape
+      over the same path, so a rebuild next to the stale frame would read
+      the stale blocks.
+    Entries of other applicationIds (stopped sessions) are dropped without
+    unpersist: their contexts are gone. A hit moves to the back, so
+    eviction is least-recently-used. ``build()`` may itself insert (the
+    hierarchical IVF fits its coarse model inside the fine one's build);
+    the cap is enforced after the insert. Not thread-safe: the engine calls
+    it from the one driver thread that builds its queries."""
+    try:
+        fingerprints = tuple(table_fingerprint(sf_dir, t) for t in tables)
+    except OSError:
+        return build()
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, sf_dir, fingerprints, *params)
+    for k in [k for k in store if k[0] != app_id]:
+        store.pop(k)
+    if key in store:
+        store[key] = store.pop(key)
+        return store[key]
+    for k in [k for k in store if k[:2] == key[:2] and k[3:] == key[3:]]:
+        _evict(store, k)
+    value = build()
+    if isinstance(value, DataFrame):
+        value = value.persist()
+    store[key] = value
+    while len(store) > max_entries:
+        _evict(store, next(iter(store)))
+    return value
+
+
+def clear_session_caches() -> None:
+    """Evict every session-cache entry, unpersisting persisted frames (so
+    a sweep over session layouts never reads an earlier run's blocks)."""
+    for store in _STORES:
+        for key in list(store):
+            _evict(store, key)
+
+
+#: Session-scoped parquet schemas: the StructType Spark inferred from a
+#: table's footer. Inference is a one-task Spark job on every
+#: `spark.read.parquet`; a read with `.schema(...)` runs none, so a session
+#: pays it once per table version, not once per query.
+_SCHEMAS: dict[tuple, StructType] = session_store()
 
 #: Cap = the ten testdata tables × the three corpora a session realistically
 #: interleaves (the test suite alternates sf0.001/sf0.01, bench adds sf0.1),
@@ -55,26 +136,22 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     `epoch_s` below, which are timezone-agnostic and accept both NTZ and
     instant inputs.
 
-    The inferred schema is memoised per table fingerprint (`_SCHEMAS`): a
-    rewritten file is re-inferred. Paths the local filesystem cannot stat
-    (remote stores, missing tables) are read uncached, so they fail or
-    succeed exactly as a plain `spark.read.parquet` does.
+    The inferred schema is memoised per table version (`_SCHEMAS`, see
+    `session_cache`): a rewritten file is re-inferred, and a path the local
+    filesystem cannot stat is read uncached.
     """
     ensure_runtime_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        fingerprint = table_fingerprint(sf_dir, name)
-    except OSError:
-        df = spark.read.parquet(path)
-    else:
-        schema = session_memo(
-            _SCHEMAS,
-            spark,
-            (path, fingerprint),
-            lambda: spark.read.parquet(path).schema,
-            _SCHEMAS_MAX,
-        )
-        df = spark.read.schema(schema).parquet(path)
+    schema = session_cache(
+        _SCHEMAS,
+        spark,
+        sf_dir,
+        (name,),
+        (name,),
+        lambda: spark.read.parquet(path).schema,
+        _SCHEMAS_MAX,
+    )
+    df = spark.read.schema(schema).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df

@@ -24,14 +24,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recommendation_system_big_data_spark.catalog import load
+from recommendation_system_big_data_spark.catalog import load, session_cache, session_store
 from recommendation_system_big_data_spark.functions.vectors import (
     as_double_array,
     dot,
     norm,
 )
 from recommendation_system_big_data_spark.registry import register
-from recommendation_system_big_data_spark.session import session_memo
 
 #: MinHash configuration: 64 hashes in 16 bands of 4 rows → LSH s-curve
 #: threshold (1/16)^(1/4) ≈ 0.50, matching the declared Jaccard cutoff.
@@ -168,13 +167,14 @@ def _exploded_shingles(docs: DataFrame) -> DataFrame:
     )
 
 
-#: Session-scoped shingle index: (applicationId, sf_dir) → persisted
-#: (doc_id, lang, sh) frame. Both near-dup queries consume the corpus
-#: index several times (self-join sides, signature + verify); a production
-#: dedup service shingles its corpus once and serves many probes from the
-#: materialized index — this cache is that, sized at ~tokens-per-corpus
-#: strings (tens of MB at sf0.1; partitioned across executors at scale).
-_SHINGLE_INDEX: dict[tuple, DataFrame] = {}
+#: Session-scoped shingle index (catalog.session_cache, versioned by the
+#: `documents` fingerprint): the persisted (doc_id, lang, sh) frame. Both
+#: near-dup queries consume the corpus index several times (self-join
+#: sides, signature + verify); a production dedup service shingles its
+#: corpus once and serves many probes from the materialized index — this
+#: cache is that, sized at ~tokens-per-corpus strings (tens of MB at sf0.1;
+#: partitioned across executors at scale).
+_SHINGLE_INDEX: dict[tuple, DataFrame] = session_store()
 
 #: Bound on live cache entries (ADVICE r1): one index per (app, sf_dir) pair
 #: is the working set; anything older is unpersisted so cached blocks and
@@ -185,28 +185,16 @@ _SHINGLE_INDEX_MAX = 2
 #: Session-scoped hot-shingle sets, cached separately from the main index
 #: (they are a few rows each; the persist means the df-count aggregate runs
 #: once per corpus, not once per query invocation).
-_HOT_SHINGLES: dict[tuple, DataFrame] = {}
-
-
-def _lru_cached_df(cache: dict, spark: SparkSession, key_tail: tuple, build, max_entries: int) -> DataFrame:
-    """Session-scoped LRU cache of persisted DataFrames (session.session_memo).
-    Eviction unpersists non-blocking: lineage recomputes if a straggler
-    still holds the old frame; blocks drain in the background."""
-    return session_memo(
-        cache,
-        spark,
-        key_tail,
-        lambda: build().persist(),
-        max_entries,
-        on_evict=lambda df: df.unpersist(blocking=False),
-    )
+_HOT_SHINGLES: dict[tuple, DataFrame] = session_store()
 
 
 def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _lru_cached_df(
+    return session_cache(
         _SHINGLE_INDEX,
         spark,
-        (sf_dir,),
+        sf_dir,
+        ("documents",),
+        (),
         lambda: _shingled(load(spark, sf_dir, "documents")),
         _SHINGLE_INDEX_MAX,
     )
@@ -216,10 +204,12 @@ def hot_shingle_set(spark: SparkSession, sf_dir: str, df_cap: int = SHINGLE_DF_C
     """The corpus's boilerplate shingles (df > cap), persisted per session —
     a production index materializes this next to the postings, so every
     dedup probe pays the anti-join (against a few rows), not the count."""
-    return _lru_cached_df(
+    return session_cache(
         _HOT_SHINGLES,
         spark,
-        (sf_dir, df_cap),
+        sf_dir,
+        ("documents",),
+        (df_cap,),
         lambda: _hot_shingles(_exploded_index(spark, sf_dir), df_cap),
         _SHINGLE_INDEX_MAX,
     )

@@ -29,9 +29,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from recommendation_system_big_data_spark.catalog import load, table_fingerprint
+from recommendation_system_big_data_spark.catalog import load, session_cache, session_store
 from recommendation_system_big_data_spark.registry import register
-from recommendation_system_big_data_spark.session import session_memo
 
 #: Reference hyperparameters, model-als.py:111-120.
 ALS_PARAMS = dict(maxIter=10, regParam=0.1, rank=10, nonnegative=True)
@@ -73,12 +72,11 @@ class FittedALS(NamedTuple):
     held_out: DataFrame | None
 
 
-#: Session-scoped fitted ALS models: (applicationId, sf_dir, events
-#: fingerprint, split) → FittedALS. The fingerprint (catalog.
-#: table_fingerprint) makes a rewritten events table refit instead of
-#: serving a stale model. Eviction drops the reference; Spark's
-#: ContextCleaner then frees the model's persisted factor RDDs.
-_FITTED_ALS: dict[tuple, FittedALS] = {}
+#: Session-scoped fitted ALS models (catalog.session_cache, versioned by
+#: the `events` fingerprint, one entry per split). Eviction drops the
+#: reference; Spark's ContextCleaner then frees the model's persisted
+#: factor RDDs.
+_FITTED_ALS: dict[tuple, FittedALS] = session_store()
 
 #: Cap = two fits (split, full) × the three corpora a session realistically
 #: interleaves (the test suite alternates sf0.001/sf0.01, bench adds sf0.1).
@@ -100,12 +98,8 @@ def fitted_als(
         train, held_out = ratings.randomSplit(list(split), seed=SEED)
         return FittedALS(train_als(train), held_out)
 
-    return session_memo(
-        _FITTED_ALS,
-        spark,
-        (sf_dir, table_fingerprint(sf_dir, "events"), split),
-        fit,
-        _FITTED_ALS_MAX,
+    return session_cache(
+        _FITTED_ALS, spark, sf_dir, ("events",), (split,), fit, _FITTED_ALS_MAX
     )
 
 

@@ -21,14 +21,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from recommendation_system_big_data_spark.catalog import load
+from recommendation_system_big_data_spark.catalog import load, session_cache, session_store
 from recommendation_system_big_data_spark.functions.vectors import (
     as_double_array,
     dot,
     norm,
 )
 from recommendation_system_big_data_spark.registry import register
-from recommendation_system_big_data_spark.session import session_memo
 
 TOP_K = 10
 N_QUERIES = 20  # vec_id < 20 form the deterministic query set
@@ -197,27 +196,23 @@ def kmeans_centroids(
     return cent
 
 
-#: Session-scoped fitted ANN models: (applicationId, sf_dir, kind) →
-#: driver-side model (centroid rows / PQ codebook lists). The engine's
-#: three IVF consumers (sim_topk_ivf, sim_topk_ivfpq,
-#: dedup_semantic_semdedup) and three PQ consumers (sim_topk_pq_adc,
-#: sim_topk_ivfpq, embedding_pq_compress) all fit the SAME model over the
-#: same corpus — a production ANN service trains the quantizer once and
-#: serves every probe from it, exactly like the shingle index caches the
-#: dedup corpus (operators/dedup.py::shingle_index; cold/warm contract
-#: documented in BASELINE.md). Models are k×d / M·K·d_sub driver values
-#: (a few hundred KB), so eviction needs no unpersist; entries from
-#: stopped sessions drop on the next call.
+#: Session-scoped fitted ANN models (catalog.session_cache, versioned by
+#: the `embeddings` fingerprint, one entry per model kind): driver-side
+#: centroid rows / PQ codebook lists. The engine's three IVF consumers
+#: (sim_topk_ivf, sim_topk_ivfpq, dedup_semantic_semdedup) and three PQ
+#: consumers (sim_topk_pq_adc, sim_topk_ivfpq, embedding_pq_compress) all
+#: fit the SAME model over the same corpus — a production ANN service
+#: trains the quantizer once and serves every probe from it, exactly like
+#: the shingle index caches the dedup corpus (operators/dedup.py::
+#: shingle_index; cold/warm contract documented in BASELINE.md). Models
+#: are k×d / M·K·d_sub driver values (a few hundred KB), not persisted
+#: frames, so eviction just drops them.
 #: Cap = model kinds (ivf_centroids, coarse_centroids, pq_codebooks) ×
 #: corpora a session realistically interleaves (the test suite alternates
 #: sf0.001/sf0.01, bench adds sf0.1) — 3×3 rounded up. A cap of 4 caused
 #: evict-and-refit thrash on every sf_dir interleave.
-_FITTED_MODELS: dict[tuple, object] = {}
+_FITTED_MODELS: dict[tuple, object] = session_store()
 _FITTED_MODELS_MAX = 12
-
-
-def _session_model(spark: SparkSession, key_tail: tuple, build):
-    return session_memo(_FITTED_MODELS, spark, key_tail, build, _FITTED_MODELS_MAX)
 
 
 def corpus_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,10 +225,14 @@ def corpus_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus's fitted IVF coarse quantizer, trained once per session
     (deterministic — cached and fresh fits are identical rows)."""
-    rows = _session_model(
+    rows = session_cache(
+        _FITTED_MODELS,
         spark,
-        (sf_dir, "ivf_centroids"),
+        sf_dir,
+        ("embeddings",),
+        ("ivf_centroids",),
         lambda: kmeans_centroids(corpus_vectors(spark, sf_dir)).collect(),
+        _FITTED_MODELS_MAX,
     )
     return spark.createDataFrame(
         rows, schema="centroid_id long, cv array<double>"
@@ -242,10 +241,14 @@ def corpus_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def corpus_pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     """The corpus's fitted PQ codebooks, trained once per session."""
-    return _session_model(
+    return session_cache(
+        _FITTED_MODELS,
         spark,
-        (sf_dir, "pq_codebooks"),
+        sf_dir,
+        ("embeddings",),
+        ("pq_codebooks",),
         lambda: _pq_fit_codebooks(corpus_vectors(spark, sf_dir)),
+        _FITTED_MODELS_MAX,
     )
 
 
@@ -315,14 +318,18 @@ def corpus_coarse_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, corpus) like every fitted model. Input is the k×d fine
     model — driver-sized — so this fit costs k·√k dot products, noise at
     any scale."""
-    rows = _session_model(
+    rows = session_cache(
+        _FITTED_MODELS,
         spark,
-        (sf_dir, "coarse_centroids"),
+        sf_dir,
+        ("embeddings",),
+        ("coarse_centroids",),
         lambda: kmeans_centroids(
             corpus_centroids(spark, sf_dir).select(
                 F.col("centroid_id").alias("vec_id"), F.col("cv").alias("v")
             )
         ).collect(),
+        _FITTED_MODELS_MAX,
     )
     return spark.createDataFrame(
         rows, schema="centroid_id long, cv array<double>"

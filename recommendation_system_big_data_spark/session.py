@@ -95,42 +95,6 @@ def get_spark(
     return spark
 
 
-def session_memo(
-    cache: dict,
-    spark: SparkSession,
-    key_tail: tuple,
-    build,
-    max_entries: int,
-    on_evict=None,
-):
-    """Session-scoped LRU memo shared by the engine's fit-once caches (ALS
-    models, ANN quantizers, the shingle index, parquet schemas).
-
-    Keys are ``(applicationId,) + key_tail``. Entries of other
-    applicationIds (stopped sessions) are dropped first, without
-    ``on_evict``: their contexts are gone. A hit moves to the back, so
-    eviction is least-recently-USED and interleaved corpora don't evict
-    each other's hot entries. ``build()`` may itself insert (the
-    hierarchical IVF fits its coarse model inside the fine one's build);
-    the cap is enforced after the insert, and ``on_evict`` receives each
-    evicted value (persisted frames unpersist there). Not thread-safe: the
-    engine calls it from the one driver thread that builds its queries."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id,) + key_tail
-    for k in [k for k in cache if k[0] != app_id]:
-        cache.pop(k)
-    if key in cache:
-        cache[key] = cache.pop(key)
-        return cache[key]
-    value = build()
-    cache[key] = value
-    while len(cache) > max_entries:
-        evicted = cache.pop(next(iter(cache)))
-        if on_evict is not None:
-            on_evict(evicted)
-    return value
-
-
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable conf to a session we may not have built.
 

@@ -166,6 +166,61 @@ def test_shingle_index_bounded_eviction(spark, sf_dir):
     D._SHINGLE_INDEX.clear()
 
 
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_shingle_caches_rebuild_rewritten_documents(spark, sf_dir, tmp_path):
+    """Rewriting documents.parquet inside the session makes the shingle
+    index and the hot-shingle set rebuild, with the row counts of a fresh
+    build, and unpersists the stale frames. The fresh build reads a copy
+    at another path: Spark's CacheManager would serve a plan over the
+    rewritten path from any stale frame still persisted. For the same
+    reason a stale frame's `storageLevel` reports its same-shaped
+    successor's, so the stale blocks are checked as persisted RDDs."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from recommendation_system_big_data_spark.operators import dedup as D
+
+    live, fresh = tmp_path / "live", tmp_path / "fresh"
+    live.mkdir()
+    fresh.mkdir()
+    shutil.copy(f"{sf_dir}/documents.parquet", live / "documents.parquet")
+    cap = 3  # low enough that the testdata corpus has hot shingles
+    before = _persisted_rdds(spark)
+    n_docs = D.shingle_index(spark, str(live)).count()
+    n_hot = D.hot_shingle_set(spark, str(live), cap).count()
+    stale_blocks = _persisted_rdds(spark) - before
+    assert stale_blocks
+
+    table = pq.read_table(live / "documents.parquet")
+    for d in (live, fresh):
+        pq.write_table(table.slice(0, table.num_rows // 2), d / "documents.parquet")
+    index = D.shingle_index(spark, str(live))
+    hot = D.hot_shingle_set(spark, str(live), cap)
+    docs = load(spark, str(fresh), "documents")
+    assert index.count() == D._shingled(docs).count() == n_docs // 2
+    assert hot.count() == D._hot_shingles(D._exploded_shingles(docs), cap).count()
+    assert hot.count() < n_hot
+    assert not stale_blocks & _persisted_rdds(spark)
+    assert index.storageLevel.useMemory and hot.storageLevel.useMemory
+
+
+def test_clear_session_caches_unpersists(spark, sf_dir):
+    """The package-level clear empties the stores and unpersists frames."""
+    from recommendation_system_big_data_spark.catalog import clear_session_caches
+    from recommendation_system_big_data_spark.operators import dedup as D
+
+    index = D.shingle_index(spark, sf_dir)
+    hot = D.hot_shingle_set(spark, sf_dir)
+    clear_session_caches()
+    assert not D._SHINGLE_INDEX and not D._HOT_SHINGLES
+    assert index.storageLevel.useMemory is False
+    assert hot.storageLevel.useMemory is False
+
+
 def test_df_cap_is_noop_on_testdata(spark, sf_dir):
     """VERDICT r2 #5: the SHINGLE_DF_CAP boilerplate anti-join must not
     change results on the test corpus (max shingle df 25 at sf0.1, far

@@ -175,8 +175,8 @@ def test_als_jobs_fit_twice_per_session(spark, sf_dir, monkeypatch):
 
     app_id = spark.sparkContext.applicationId
     fp = table_fingerprint(sf_dir, "events")
-    split = R._FITTED_ALS[(app_id, sf_dir, fp, R.HOLDOUT_SPLIT)]
-    full = R._FITTED_ALS[(app_id, sf_dir, fp, None)]
+    split = R._FITTED_ALS[(app_id, sf_dir, (fp,), R.HOLDOUT_SPLIT)]
+    full = R._FITTED_ALS[(app_id, sf_dir, (fp,), None)]
     assert split.model is not full.model
     assert split.held_out is not None and full.held_out is None
 
@@ -214,7 +214,7 @@ def test_als_cache_bounded_and_session_scoped(spark, sf_dir, tmp_path, monkeypat
 
     R._FITTED_ALS.clear()
     calls = _count_fits(monkeypatch, fit=lambda ratings: object())
-    R._FITTED_ALS[("stopped-app", sf_dir, (0, 0), None)] = None
+    R._FITTED_ALS[("stopped-app", sf_dir, ((0, 0),), None)] = None
     dirs = [
         _copy_events(sf_dir, tmp_path / f"c{i}") for i in range(R._FITTED_ALS_MAX + 2)
     ]

@@ -372,6 +372,7 @@ def test_session_model_cache_matches_fresh_fit(spark, sf_dir):
     fresh fit of the same corpus (the determinism that makes the
     index-once/probe-many posture safe), and repeated calls hit the
     cache (same driver-side object)."""
+    from recommendation_system_big_data_spark.catalog import table_fingerprint
     from recommendation_system_big_data_spark.operators.similarity import (
         _FITTED_MODELS,
         _pq_fit_codebooks,
@@ -392,7 +393,49 @@ def test_session_model_cache_matches_fresh_fit(spark, sf_dir):
     # second call returns the memoized object, not a refit
     assert corpus_pq_codebooks(spark, sf_dir) is cb_cached
     app_id = spark.sparkContext.applicationId
-    assert (app_id, sf_dir, "ivf_centroids") in _FITTED_MODELS
+    fp = table_fingerprint(sf_dir, "embeddings")
+    assert (app_id, sf_dir, (fp,), "ivf_centroids") in _FITTED_MODELS
+
+
+def test_session_model_cache_refits_rewritten_embeddings(spark, sf_dir, tmp_path):
+    """Rewriting embeddings.parquet inside the session makes the IVF
+    centroids and PQ codebooks refit: both equal a fresh fit of the
+    rewritten corpus."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from recommendation_system_big_data_spark.operators.similarity import (
+        _pq_fit_codebooks,
+        corpus_centroids,
+        corpus_pq_codebooks,
+        corpus_vectors,
+        kmeans_centroids,
+    )
+
+    d = str(tmp_path)
+    shutil.copy(f"{sf_dir}/embeddings.parquet", tmp_path / "embeddings.parquet")
+    stale = sorted(map(str, corpus_centroids(spark, d).collect()))
+    stale_cb = corpus_pq_codebooks(spark, d)
+
+    table = pq.read_table(tmp_path / "embeddings.parquet")
+    pq.write_table(table.slice(0, table.num_rows // 2), tmp_path / "embeddings.parquet")
+    cached = sorted(map(str, corpus_centroids(spark, d).collect()))
+    fresh = sorted(map(str, kmeans_centroids(corpus_vectors(spark, d)).collect()))
+    assert cached == fresh and cached != stale
+    cb = corpus_pq_codebooks(spark, d)
+    assert cb == _pq_fit_codebooks(corpus_vectors(spark, d)) and cb != stale_cb
+
+
+def _model(spark, d, kind, build):
+    """A synthetic entry of the ANN model cache: corpus ``d``, model
+    ``kind``, built from no table."""
+    from recommendation_system_big_data_spark.catalog import session_cache
+    from recommendation_system_big_data_spark.operators import similarity as S
+
+    return session_cache(
+        S._FITTED_MODELS, spark, d, (), (kind,), build, S._FITTED_MODELS_MAX
+    )
 
 
 def test_session_model_cache_eviction_bounded(spark, sf_dir):
@@ -409,12 +452,12 @@ def test_session_model_cache_eviction_bounded(spark, sf_dir):
 
     S._FITTED_MODELS.clear()
     for i in range(S._FITTED_MODELS_MAX + 2):
-        S._session_model(spark, (f"dir{i}", "kind"), build)
+        _model(spark, f"dir{i}", "kind", build)
     assert len(S._FITTED_MODELS) <= S._FITTED_MODELS_MAX
     assert builds["n"] == S._FITTED_MODELS_MAX + 2
     # the oldest entry was evicted; re-requesting it rebuilds
     before = builds["n"]
-    S._session_model(spark, ("dir0", "kind"), build)
+    _model(spark, "dir0", "kind", build)
     assert builds["n"] == before + 1
     S._FITTED_MODELS.clear()
 
@@ -438,29 +481,29 @@ def test_session_model_cache_true_lru(spark, sf_dir):
     for _ in range(3):  # three interleaved passes over 2 corpora × 3 kinds
         for d in ("dirA", "dirB"):
             for k in kinds:
-                S._session_model(spark, (d, k), build)
+                _model(spark, d, k, build)
     assert builds["n"] == 6, "interleaved hot set must fit with zero refits"
 
     # nested insert during build() must respect the cap
     def nested_build():
-        S._session_model(spark, ("dirC", "coarse"), build)
+        _model(spark, "dirC", "coarse", build)
         builds["n"] += 1
         return builds["n"]
 
-    S._session_model(spark, ("dirC", "fine"), nested_build)
+    _model(spark, "dirC", "fine", nested_build)
     assert len(S._FITTED_MODELS) <= S._FITTED_MODELS_MAX
     # LRU order: touch the oldest entry, fill to the cap, and the
     # refreshed entry must survive while a non-touched one is evicted
-    S._session_model(spark, ("dirA", "ivf_centroids"), build)  # hit
+    _model(spark, "dirA", "ivf_centroids", build)  # hit
     n_before = builds["n"]
     i = 0
     while len(S._FITTED_MODELS) < S._FITTED_MODELS_MAX:
-        S._session_model(spark, (f"fill{i}", "k"), build)
+        _model(spark, f"fill{i}", "k", build)
         i += 1
-    S._session_model(spark, ("overflow", "k"), build)  # forces one eviction
+    _model(spark, "overflow", "k", build)  # forces one eviction
     app_id = spark.sparkContext.applicationId
-    assert (app_id, "dirA", "ivf_centroids") in S._FITTED_MODELS
-    S._session_model(spark, ("dirA", "ivf_centroids"), build)
+    assert (app_id, "dirA", (), "ivf_centroids") in S._FITTED_MODELS
+    _model(spark, "dirA", "ivf_centroids", build)
     assert builds["n"] == n_before + (i + 1), "refreshed entry was refit"
     S._FITTED_MODELS.clear()
 

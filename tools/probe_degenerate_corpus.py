@@ -137,20 +137,6 @@ def norm(v):
     return v
 
 
-def clear_session_caches() -> None:
-    """Session-persisted index caches are keyed per sf_dir, but clear them
-    anyway so no fixture reads another's materialization (the r9
-    layout-sweep lesson)."""
-    from recommendation_system_big_data_spark.operators import dedup, recommend, similarity
-
-    for attr in ("_SHINGLE_INDEX", "_HOT_SHINGLES"):
-        if hasattr(dedup, attr) and isinstance(getattr(dedup, attr), dict):
-            getattr(dedup, attr).clear()
-    if hasattr(similarity, "_FITTED_MODELS"):
-        similarity._FITTED_MODELS.clear()
-    recommend._FITTED_ALS.clear()
-
-
 def main() -> None:
     argv = sys.argv[1:]
     only: set[str] | None = None
@@ -165,6 +151,7 @@ def main() -> None:
     root = "/tmp/degen_corpus"
     from pyspark.sql import SparkSession
 
+    from recommendation_system_big_data_spark.catalog import clear_session_caches
     from recommendation_system_big_data_spark.registry import registry
 
     spark = (
@@ -192,6 +179,8 @@ def main() -> None:
     exit_code = 0
     for kind in kinds:
         sf = build_fixture(kind, root)
+        # No fixture reads another's materialization (the r9 layout-sweep
+        # lesson).
         clear_session_caches()
         con = duckdb.connect()
         for t in TABLES:

@@ -51,6 +51,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from recommendation_system_big_data_spark.catalog import clear_session_caches  # noqa: E402
 from recommendation_system_big_data_spark.registry import registry  # noqa: E402
 
 args = sys.argv[1:]
@@ -74,27 +75,6 @@ spark = (
 )
 
 
-def _clear_session_caches():
-    """Drop the session-scoped PERSISTED frames and fitted models between
-    layout runs. Without this, layout B reads the shingle index (and any
-    k-means model) materialized under layout A's partitioning, and every
-    cached-index consumer compares A against A — a vacuous zero-diff
-    (found by round-9 review; the first sweep's dedup-family evidence was
-    overstated exactly this way)."""
-    from recommendation_system_big_data_spark.operators import dedup as _dedup
-    from recommendation_system_big_data_spark.operators import (
-        recommend as _recommend,
-        similarity as _similarity,
-    )
-
-    for cache in (_dedup._SHINGLE_INDEX, _dedup._HOT_SHINGLES):
-        for df in cache.values():
-            df.unpersist(blocking=False)
-        cache.clear()
-    _similarity._FITTED_MODELS.clear()
-    _recommend._FITTED_ALS.clear()
-
-
 def _norm_exact(v):
     """repr-exact normalization: floats by exact repr (the driver-hash
     standard — NO round(9) forgiveness), Decimals value-normalized so
@@ -109,7 +89,11 @@ def _norm_exact(v):
 
 
 def run(name, shuffle, split_bytes):
-    _clear_session_caches()
+    # Without this, layout B reads the session-persisted shingle index (and
+    # any fitted model) materialized under layout A's partitioning, and
+    # every cached-index consumer compares A against A — a vacuous
+    # zero-diff (found by round-9 review).
+    clear_session_caches()
     spark.conf.set("spark.sql.shuffle.partitions", shuffle)
     spark.conf.set("spark.sql.files.maxPartitionBytes", split_bytes)
     df = R[name].fn(spark, SF)
